@@ -277,10 +277,6 @@ object Queries {
     * fifth doc (exercising the dangling-mass term). The Verify replica
     * (_fixture_pagerank) re-derives the same graph from doc_ids alone.
     */
-  /** Exposed for the ProfilePagerank dev tool only. */
-  private[graft] def plantedLinkPagesForProfiling(s: SparkSession, d: String): DataFrame =
-    plantedLinkPages(s, d)
-
   private def plantedLinkPages(s: SparkSession, d: String): DataFrame = {
     val did = col("doc_id")
     Tables.spread(t(s, d, "documents")).select(

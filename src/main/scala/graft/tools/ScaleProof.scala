@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry, Bench}
+import graft.{Bench, GraftSession}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,18 +101,6 @@ object ScaleProof {
       s"""{"src":"$src","factor":$factor,"key_offset":$off}""" + "\n")
   }
 
-  /** Median-of-3 + min wall times after one warm pass, Bench's protocol. */
-  private def time(spark: SparkSession, name: String, dir: String): (Double, Double) = {
-    val fn = SparkEntry.queries(name)
-    fn(spark, dir).write.format("noop").mode("overwrite").save() // warm
-    val ts = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.sorted
-    (ts(1), ts.head)
-  }
-
   /** Opt-in second tier (`--extended`): one representative per NEW
     * operator family whose scale shape the headline set doesn't cover —
     * index builds and model training, the operators with corpus-sized
@@ -208,9 +196,9 @@ object ScaleProof {
     val queryList =
       if (ext) (Bench.headline ++ extended).distinct else Bench.headline
     val rows = queryList.map { q =>
-      val (srcMed, srcMin) = time(spark, q, src)
-      val (dstMed, dstMin) = time(spark, q, dst)
-      // compare on min (the contention-robust reading, README bench note)
+      val Seq(Bench.Timing(_, srcMed, srcMin, _)) = Bench.timeQueries(spark, Seq(q), src)
+      val Seq(Bench.Timing(_, dstMed, dstMin, _)) = Bench.timeQueries(spark, Seq(q), dst)
+      // compare on min, the reading least moved by contention
       val ratio = dstMin / srcMin
       if (ratio > factor * slack) weak ::= q
       println(s"""{"query":"$q","src_min":${n3(srcMin)},"src_med":${n3(srcMed)},""" +

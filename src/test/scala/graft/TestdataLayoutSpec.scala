@@ -84,6 +84,26 @@ class TestdataLayoutSpec extends SparkSpec {
     assert(SparkEntry.queries.size === names.size)
   }
 
+  test("the bench and scale-proof query lists name only inventory queries " +
+    "(a typo would otherwise surface only after ScaleProof built its 10x data)") {
+    val unknown = (Bench.headline ++ graft.tools.ScaleProof.extended)
+      .filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: ${unknown.mkString(", ")}")
+  }
+
+  test("Bench rejects an unknown query name before running anything") {
+    assert(Bench.selection(None) === Bench.headline)
+    assert(Bench.selection(Some(" q_json_extract,,q_profile ")) === Seq("q_json_extract", "q_profile"))
+    Seq(Some("q_json_extract,q_nope"), Some(" , ")).foreach { arg =>
+      intercept[IllegalArgumentException](Bench.selection(arg))
+    }
+    // main validates before it starts a session or runs a query: the
+    // valid name listed first must not run, and the shared session lives on
+    val e = intercept[IllegalArgumentException](Bench.main(Array("q_json_extract,q_nope")))
+    assert(e.getMessage.contains("unknown queries q_nope"))
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("tsEpochUs/tsEpochMs/tsAsTimestamp agree with each other on events") {
     import org.apache.spark.sql.functions._
     val ev = Tables.events(spark, sf)
